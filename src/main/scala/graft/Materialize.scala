@@ -43,11 +43,21 @@ import org.apache.spark.storage.StorageLevel
   *    the default `local` mode (blocks are reclaimed by the
   *    ContextCleaner after GC).
   *
-  * [[shared]] is lazy (materializes at first action — construction and
-  * explain-only plan audits stay free); [[now]] is eager, for frames
+  * [[shared]] writes its rows at the first action, but it is not free
+  * to construct. In the default mode the checkpoint needs the frame's
+  * final physical plan, and under AQE (on by default) finalizing a plan
+  * runs every shuffle and broadcast stage in it: constructing a
+  * [[shared]] frame whose plan has an exchange runs those jobs at once,
+  * on the constructing thread. Only a frame without exchanges, or any
+  * frame in `persist` mode, costs no job to construct (MaterializeSpec
+  * pins both). Code that fans branches out over threads ([[Fanout]])
+  * therefore builds each [[shared]] frame inside the branch that needs
+  * it; built on the calling thread before the fan-out, the frames would
+  * run their stages one after another. [[now]] is eager, for frames
   * that feed several BROADCAST builds on concurrent threads, where jobs
   * racing over a lazy frame each recompute it (the AnnFrames seal
-  * rationale, VERDICT r11 #2), and for loop-carried frames.
+  * rationale, VERDICT r11 #2), for frames several fan-out branches read,
+  * and for loop-carried frames.
   */
 object Materialize {
   private def reliable(ds: Dataset[_]): Boolean =
@@ -59,7 +69,8 @@ object Materialize {
         s"spark.graft.materialize must be 'local' or 'persist', got '$v'")
     }
 
-  /** Lazily-materialized shared intermediate (one compute, N readers). */
+  /** Lazily-written shared intermediate (one compute, N readers); runs
+    * the frame's exchange stages at construction (see above). */
   def shared[T](ds: Dataset[T]): Dataset[T] =
     if (reliable(ds)) ds.persist(StorageLevel.MEMORY_AND_DISK)
     else ds.localCheckpoint(eager = false)

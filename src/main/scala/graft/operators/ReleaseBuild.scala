@@ -1,9 +1,11 @@
 package graft.operators
 
+import scala.concurrent.Future
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, sinks}
+import graft.{Fanout, Tables, sinks}
 import sinks.Sinks
 
 /** The RELEASE-side product flow — the write-path mirror of
@@ -40,9 +42,22 @@ import sinks.Sinks
   * Scale shape: ONE funnel pass decides the kept set (each stage the
   * proven operator's plan); every downstream artifact is one
   * already-audited query over the kept frame (q76/q131's two-level
-  * sharded ranks, q141/q138's per-source rollups). The kept id set
-  * rides a lazy checkpoint so the funnel executes once, not once per
-  * artifact. Deterministic under reruns: every stage is salted-hash /
+  * sharded ranks, q141/q138's per-source rollups). Every frame read
+  * more than once (the universe, the disposition, the kept docs, each
+  * keep-list and paired table) is materialized, so the funnel executes
+  * once, not once per artifact. Its jobs are mostly one task wide, so
+  * run one after another they leave the cores idle; the flow is instead
+  * a small DAG on a [[graft.Fanout]] with three branches and their join
+  * points:
+  *  - the text funnel (disposition, then the kept docs), the asset
+  *    keep-list and the vector keep-list start at once;
+  *  - each paired table starts when the disposition and its keep-list
+  *    are both ready;
+  *  - each artifact write starts when its frame is ready, the
+  *    tri-modal rollup when both paired tables are;
+  *  - the ledger rows and log lines follow once every write has
+  *    landed; a failed write fails the build with neither written.
+  * Deterministic under reruns: every stage is salted-hash /
   * integer arithmetic, `ts` is caller-supplied (the S8 rule), and
   * rerunning overwrites byte-identical artifacts (spec-pinned).
   */
@@ -67,89 +82,95 @@ object ReleaseBuild {
     // eval docs (doc_id % 10 == 0) are the BENCHMARK holdout — they
     // gate the funnel's decontamination stages but must never ship in
     // a training release (the q151 rule); the release universe is the
-    // train side only
-    val universe = docsUniverse
-      .transform(graft.Materialize.shared) // feeds six funnel stages + kept
+    // train side only. Sealed before the fan-out: the funnel and the
+    // asset branch both read it.
+    val universe = graft.Materialize.now(docsUniverse)
     val d = universe.filter(col("doc_id") % 10 =!= 0)
-    val disposition = CurationQueries.funnelDispositionOf(universe)
-      .filter(col("doc_id") % 10 =!= 0)
-      .transform(graft.Materialize.shared) // feeds provenance write + kept
-    val keptDocs = d.join(
-      disposition.filter(col("disposition") === "kept")
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .transform(graft.Materialize.shared) // feeds all five artifacts
 
-    def w(df: DataFrame, name: String): Long = {
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      spark.read.parquet(s"$outDir/$name.parquet").count()
+    // each shared frame is built inside its branch: under AQE building
+    // it already runs its shuffle stages (see Materialize)
+    val counts = Fanout.run(spark) { fan =>
+      val disposition = fan(CurationQueries.funnelDispositionOf(universe)
+        .filter(col("doc_id") % 10 =!= 0)
+        .transform(graft.Materialize.shared)) // provenance, kept, paired
+      val keptDocs = fan.after(disposition)(disp => d.join(
+        disp.filter(col("disposition") === "kept")
+          .select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .transform(graft.Materialize.shared)) // feeds all five artifacts
+      // the asset keep-list (VERDICT r12 "Next round" #4): q130's
+      // election over the release universe's assets — unclustered
+      // assets ship, each perceptual-hash cluster ships exactly its
+      // elected member (max caption quality, min-id tie-break)
+      val keptAssetsDf = fan(graft.multimodal.Multimodal.keptAssetsOf(spark,
+          graft.multimodal.Multimodal.assetDocsOf(d))
+        .transform(graft.Materialize.shared)) // artifact + paired report
+      // the caption↔asset consistency record (VERDICT r13 "Next round"
+      // #4): ships beside the two keep-lists so a pair inconsistency
+      // (text dropped, asset kept, or vice versa) is visible in the
+      // release itself — ONE classification definition with q195
+      val pairedAssets = fan.after(disposition.zip(keptAssetsDf)) {
+        case (disp, ka) => graft.multimodal.Multimodal
+          .pairedCurationOf(disp, ka)
+          .transform(graft.Materialize.shared) // artifact + rollup
+      }
+      // the vector keep-list (VERDICT r13 "Next round" #1): the q91
+      // election over the release's embeddings universe — unclustered
+      // vectors ship, each semantic cluster ships exactly its elected
+      // survivor; no shipped pair within NearDupThreshold
+      // (ReleaseBuildSpec asserts the kept_assets pin, vector flavor).
+      // None = a text-only release universe (the chain-equality specs).
+      val keptVectorsDf = vecsUniverse.map(e =>
+        fan(VectorQueries.keptVectorsOf(e)
+          .transform(graft.Materialize.shared))) // artifact + paired
+      // the doc↔vector consistency record (VERDICT r14 "Next round" #1):
+      // the q196 classifier over the release's own funnel frames — a kept
+      // doc whose vector lost the election (unservable in ANN/retrieval)
+      // and a shipped vector for a dropped doc (poisons q135/q140 mining)
+      // both become visible rows in the release itself
+      val pairedVectors = keptVectorsDf.map(kv =>
+        fan.after(disposition.zip(kv)) {
+          case (disp, v) => VectorQueries.pairedVectorCurationOf(disp, v)
+            .transform(graft.Materialize.shared) // artifact + rollup
+        })
+      def write(name: String, frame: Future[DataFrame],
+          artifact: DataFrame => DataFrame = identity) =
+        fan.after(frame) { df =>
+          artifact(df).write.mode("overwrite")
+            .parquet(s"$outDir/$name.parquet")
+          name -> spark.read.parquet(s"$outDir/$name.parquet").count()
+        }
+      Seq(
+        write("disposition", disposition, _.orderBy(col("doc_id"))),
+        write("kept_docs", keptDocs),
+        write("kept_assets", keptAssetsDf),
+        write("paired_curation", pairedAssets),
+        write("packing", keptDocs, CurationQueries.packSequencesDocs)) ++
+      keptVectorsDf.map(write("kept_vectors", _)) ++
+      pairedVectors.map(write("paired_vector_curation", _)) ++ Seq(
+        // the TRI-MODAL sign-off rollup (VERDICT r14 "Next round" #1):
+        // the release decision table — per pairing (text↔asset,
+        // text↔vector), pair-status counts off the SAME shipped paired
+        // tables, so sign-off reads one table and reconciles by
+        // construction (spec-pinned against the two artifacts)
+        write("curation_rollup",
+          fan.afterAll(pairedAssets +: pairedVectors.toSeq)(
+            _.zip(Seq("text_asset", "text_vector"))
+              .map { case (p, pairing) =>
+                p.select(lit(pairing).as("pairing"), col("pair_status")) }
+              .reduce(_.unionByName(_))),
+          _.groupBy(col("pairing"), col("pair_status"))
+            .agg(count(lit(1)).as("n_docs"))
+            .orderBy(col("pairing"), col("pair_status"))),
+        write("manifest", keptDocs, CurationQueries.shardManifestDocs),
+        write("mixture", keptDocs, CurationQueries.mixtureRecipeDocs),
+        // the EPOCH-READY manifest (VERDICT r14 "Next round" #3): the
+        // mixture recipe APPLIED — each kept doc repeated to its source's
+        // temperature target (whole epochs + a seeded fractional prefix,
+        // Σ tokens per source within one doc of the recipe — spec-pinned)
+        // and shard-assigned per copy; what a training run actually loads
+        write("mixed_manifest", keptDocs, CurationQueries.mixedManifestDocs),
+        write("report_card", keptDocs, CurationQueries.sourceReportDocs))
     }
-    // the asset keep-list (VERDICT r12 "Next round" #4): q130's
-    // election over the release universe's assets — unclustered
-    // assets ship, each perceptual-hash cluster ships exactly its
-    // elected member (max caption quality, min-id tie-break)
-    val keptAssetsDf = graft.multimodal.Multimodal.keptAssetsOf(spark,
-        graft.multimodal.Multimodal.assetDocsOf(d))
-      .transform(graft.Materialize.shared) // artifact + paired report
-    // the caption↔asset consistency record (VERDICT r13 "Next round"
-    // #4): ships beside the two keep-lists so a pair inconsistency
-    // (text dropped, asset kept, or vice versa) is visible in the
-    // release itself — ONE classification definition with q195
-    val pairedAssets = graft.multimodal.Multimodal
-      .pairedCurationOf(disposition, keptAssetsDf)
-      .transform(graft.Materialize.shared) // artifact + rollup
-    // the vector keep-list (VERDICT r13 "Next round" #1): the q91
-    // election over the release's embeddings universe — unclustered
-    // vectors ship, each semantic cluster ships exactly its elected
-    // survivor; no shipped pair within NearDupThreshold
-    // (ReleaseBuildSpec asserts the kept_assets pin, vector flavor).
-    // None = a text-only release universe (the chain-equality specs).
-    val keptVectorsDf = vecsUniverse.map(e =>
-      VectorQueries.keptVectorsOf(e)
-        .transform(graft.Materialize.shared)) // artifact + paired + rollup
-    // the doc↔vector consistency record (VERDICT r14 "Next round" #1):
-    // the q196 classifier over the release's own funnel frames — a kept
-    // doc whose vector lost the election (unservable in ANN/retrieval)
-    // and a shipped vector for a dropped doc (poisons q135/q140 mining)
-    // both become visible rows in the release itself
-    val pairedVectors = keptVectorsDf.map(kv => VectorQueries
-      .pairedVectorCurationOf(disposition, kv)
-      .transform(graft.Materialize.shared)) // artifact + rollup
-    val counts = Seq(
-      "disposition" -> w(disposition.orderBy(col("doc_id")), "disposition"),
-      "kept_docs" -> w(keptDocs, "kept_docs"),
-      "kept_assets" -> w(keptAssetsDf, "kept_assets"),
-      "paired_curation" -> w(pairedAssets, "paired_curation"),
-      "packing" -> w(CurationQueries.packSequencesDocs(keptDocs),
-        "packing")) ++ keptVectorsDf.map(kv =>
-      "kept_vectors" -> w(kv, "kept_vectors")) ++ pairedVectors.map(pv =>
-      "paired_vector_curation" -> w(pv, "paired_vector_curation")) ++ Seq(
-      // the TRI-MODAL sign-off rollup (VERDICT r14 "Next round" #1):
-      // the release decision table — per pairing (text↔asset,
-      // text↔vector), pair-status counts off the SAME shipped paired
-      // tables, so sign-off reads one table and reconciles by
-      // construction (spec-pinned against the two artifacts)
-      "curation_rollup" -> w(
-        (Seq(pairedAssets.select(lit("text_asset").as("pairing"),
-            col("pair_status"))) ++
-          pairedVectors.map(_.select(lit("text_vector").as("pairing"),
-            col("pair_status"))))
-          .reduce(_.unionByName(_))
-          .groupBy(col("pairing"), col("pair_status"))
-          .agg(count(lit(1)).as("n_docs"))
-          .orderBy(col("pairing"), col("pair_status")), "curation_rollup"),
-      "manifest" -> w(CurationQueries.shardManifestDocs(keptDocs),
-        "manifest"),
-      "mixture" -> w(CurationQueries.mixtureRecipeDocs(keptDocs),
-        "mixture"),
-      // the EPOCH-READY manifest (VERDICT r14 "Next round" #3): the
-      // mixture recipe APPLIED — each kept doc repeated to its source's
-      // temperature target (whole epochs + a seeded fractional prefix,
-      // Σ tokens per source within one doc of the recipe — spec-pinned)
-      // and shard-assigned per copy; what a training run actually loads
-      "mixed_manifest" -> w(CurationQueries.mixedManifestDocs(keptDocs),
-        "mixed_manifest"),
-      "report_card" -> w(CurationQueries.sourceReportDocs(keptDocs),
-        "report_card"))
 
     // bookkeeping: one ledger row + one log line per artifact
     import spark.implicits._

@@ -1,5 +1,7 @@
 package org.apache.spark
 
+import java.util.Properties
+
 /** Core-side shim (same pattern as sql/graftshim/ColumnShim): the async
   * listener bus and its waitUntilEmpty are `private[spark]`, and a timed
   * harness that reads listener-accumulated task metrics needs a real
@@ -19,4 +21,22 @@ object GraftSparkShim {
     * no-checkpoint-dir state after exercising reliable checkpointing. */
   def clearCheckpointDir(sc: SparkContext): Unit =
     sc.checkpointDir = None
+
+  /** A copy of the calling thread's local properties (job group,
+    * description, scheduler pool), defaults included —
+    * `getLocalProperties` is `private[spark]`. */
+  def localProperties(sc: SparkContext): Properties =
+    copy(sc.getLocalProperties)
+
+  /** Gives the calling thread its own copy of `props` as its local
+    * properties: Spark writes per-query keys into the thread's object,
+    * so two threads must never share one. */
+  def setLocalProperties(sc: SparkContext, props: Properties): Unit =
+    sc.setLocalProperties(copy(props))
+
+  private def copy(props: Properties): Properties = {
+    val c = new Properties
+    props.stringPropertyNames.forEach(k => c.setProperty(k, props.getProperty(k)))
+    c
+  }
 }

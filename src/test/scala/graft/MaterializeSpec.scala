@@ -66,6 +66,23 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("shared runs a frame's exchange stages at construction (AQE)") {
+    val grouped = frame.groupBy(col("k")).count()
+    withMode(None) {
+      assert(jobsDuring(Materialize.shared(frame))._2.isEmpty,
+        "a frame without an exchange ran a job at construction")
+      val (m, built) = jobsDuring(Materialize.shared(grouped))
+      assert(built.nonEmpty,
+        "constructing a shared frame over an exchange ran no job")
+      assert(m.count() === 7)
+    }
+    withMode(Some("persist")) {
+      val (p, built) = jobsDuring(Materialize.shared(grouped))
+      try assert(built.isEmpty, "persist mode ran a job at construction")
+      finally p.unpersist()
+    }
+  }
+
   test("unknown mode fails loud instead of silently running local") {
     withMode(Some("reliable")) {
       val e = intercept[IllegalArgumentException] {

@@ -1,5 +1,12 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftSparkShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +33,23 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sfDir: String = TestSession.sfDir
+
+  /** Runs `body` and returns its value with the local properties of every
+    * Spark job started meanwhile, in start order. Suites run one at a
+    * time, so those are the jobs `body` caused. */
+  def jobsDuring[A](body: => A): (A, Seq[Properties]) = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[Properties]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.properties)
+    }
+    GraftSparkShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftSparkShim.drainListenerBus(sc)
+      (out, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

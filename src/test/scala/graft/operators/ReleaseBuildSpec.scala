@@ -2,6 +2,11 @@ package graft.operators
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+
 import graft.{SparkSpec, Tables}
 
 /** End-to-end gate for the ReleaseBuild orchestration: artifacts land,
@@ -203,6 +208,25 @@ class ReleaseBuildSpec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$outDir/manifest.parquet")) == before)
   }
 
+  test("a failed artifact write fails the build: no partial summary") {
+    val outDir = tmp("refused")
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[RefuseManifestCommitProtocol].getName)
+    val e = try intercept[Exception] {
+      ReleaseBuild.runOn(spark, Tables(spark, sfDir, "documents"), outDir)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == RefuseManifestCommitProtocol.Message), e)
+    // the sibling writes ran to the end; the bookkeeping never started
+    for (a <- Seq("disposition", "kept_docs", "packing", "report_card"))
+      assert(new java.io.File(s"$outDir/$a.parquet/_SUCCESS").exists, a)
+    assert(!new java.io.File(s"$outDir/ledger").exists)
+    assert(!new java.io.File(s"$outDir/logs").exists)
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith("graft-fanout-")))
+  }
+
   test("composed lifecycle: release off the 7-day delta chain == " +
       "release off per-day from-scratch ingests") {
     import org.apache.spark.sql.functions.col
@@ -272,4 +296,20 @@ class ReleaseBuildSpec extends SparkSpec {
     assert(rows(spark.read
       .parquet(s"$relChain/manifest.parquet")) == before)
   }
+}
+
+object RefuseManifestCommitProtocol {
+  val Message = "manifest.parquet refused"
+}
+
+/** Fails the release's `manifest.parquet` write and commits every other
+  * one, when set as `spark.sql.sources.commitProtocolClass`. */
+class RefuseManifestCommitProtocol(jobId: String, outputPath: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, outputPath,
+      dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: JobContext): Unit =
+    if (outputPath.endsWith("/manifest.parquet"))
+      throw new java.io.IOException(RefuseManifestCommitProtocol.Message)
+    else super.setupJob(jobContext)
 }
